@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Benchmark main. Contract: runs the catalog on
   * `SPARK_GRAFT_SF_DIR`, prints ONE machine-parseable JSON line, and
   * writes the full-fidelity per-query results to `bench_detail.json`.
@@ -64,7 +66,7 @@ object Bench {
                     "orders", "lineitem", "events", "documents", "embeddings"))
       try sources.Tables(spark, sfDir, tbl).write
         .format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     // Warm the ORC writer/reader classload too (a 1-row roundtrip):
     // q53's r6 cold time was ~8× its warm time and the delta was pure
     // first-touch ORC classloading, not plan cost.
@@ -74,7 +76,7 @@ object Bench {
       spark.range(1).write.mode("overwrite").orc(p)
       spark.read.orc(p).write.format("noop").mode("overwrite").save()
       org.apache.commons.io.FileUtils.deleteQuietly(orcWarm.toFile)
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     // Warm the VARIANT machinery (parse_json → binary Variant →
     // variant_get): q57's r7 cold was 7.5 s vs 3.3 s warm — the delta
     // was Variant classloading + codegen first-touch, the same mode as
@@ -82,7 +84,7 @@ object Bench {
     try spark.range(1)
       .selectExpr("""variant_get(parse_json('{"k":1}'), '$.k', 'bigint')""")
       .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // Warm the Structured Streaming machinery too (micro-batch planner,
     // state store provider, streaming-agg codegen) with a one-batch
     // rate-source aggregate, so the first measured st* query isn't
@@ -95,7 +97,7 @@ object Bench {
         .outputMode("complete")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination(15000); q.stop()
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     // Optional args: query-name prefixes to run (iteration aid);
     // no args = full suite (the driver contract).
     val selected =
@@ -127,12 +129,12 @@ object Bench {
         val p = d.resolve("ref").toString
         spark.range(1).repartition(1).write.mode("overwrite").parquet(p)
         Some(p)
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     def sentinelOnce(): Double = {
       val t0 = System.nanoTime()
       try sentinelPath.foreach(p => spark.read.parquet(p)
         .write.format("noop").mode("overwrite").save())
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
       (System.nanoTime() - t0) / 1e9
     }
     // sentinel entries: (key, runs, pass, pos-within-pass)
@@ -161,7 +163,7 @@ object Bench {
         // noop sink: full materialization of every output row/column —
         // a bare .count() lets Catalyst prune projections and sorts.
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
+        catch { case NonFatal(e) => System.err.println(s"[bench] $name: ${e.getMessage}") }
         runsOf.getOrElseUpdate(name,
           scala.collection.mutable.ArrayBuffer[Double]()) +=
           (System.nanoTime() - t0) / 1e9
@@ -237,7 +239,7 @@ object Bench {
          s""""runs_per_query":3,"order_seed":$orderSeed,""" +
          s""""sentinel_every":$SentinelEvery,"sentinels":$sent,""" +
          s""""queries":$full,"sf":"$sfDir"}""").getBytes("UTF-8"))
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     // The driver captures only the TAIL of the build output (observed:
     // last ~2000 chars, with sbt's "[success] ..." line inside it). The
     // r7 line crossed that window at 176 queries and the head of the
@@ -276,7 +278,7 @@ object Bench {
     // the harness's captured tail). A shutdown-race exception from
     // stop() must not eat the summary — it is the whole point of the
     // program.
-    try spark.stop() catch { case _: Throwable => }
+    try spark.stop() catch { case NonFatal(_) => }
     println(line)
     System.out.flush()
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Plan-inspection aid: prints the formatted physical plan of each named
   * query (or all, with no args) against a scale-factor dir — the
   * "explain, then iterate until it's the plan you'd want" loop.
@@ -19,7 +21,7 @@ object Explain {
       println(s"\n========== $name ==========")
       try println(fn(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      catch { case e: Throwable => println(s"[explain] failed: ${e.getMessage}") }
+      catch { case NonFatal(e) => println(s"[explain] failed: ${e.getMessage}") }
     }
     spark.stop()
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Diagnostic main for the §6.1-style repeat-run adjudications: run ONE
   * query N times in a single JVM (same session/warmup shape as Bench)
   * and print per-run wall seconds alongside the JVM-state telemetry a
@@ -21,7 +23,7 @@ object Repeat {
     for (tbl <- Seq("lineitem", "documents", "embeddings", "events"))
       try sources.Tables(spark, sfDir, tbl).write
         .format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     val (fullName, fn) = SparkEntry.queries.find(_._1.startsWith(name))
       .getOrElse(sys.error(s"no query starts with '$name'"))
     println(s"[repeat] resolved $name -> $fullName")
@@ -62,6 +64,6 @@ object Repeat {
         }
       }
     }
-    try spark.stop() catch { case _: Throwable => }
+    try spark.stop() catch { case NonFatal(_) => }
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import com.ibm.icu.text.Transliterator
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.{graftshim => shim}
 import org.apache.spark.sql.functions.udf
@@ -10,35 +9,37 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`OMTZHModifier.java:228,233,247-250`) re-expressed for Spark.
   *
   * The reference uses OpenCC (`com.github.houbb:opencc4j`, build.gradle:31)
-  * for Simplified↔Traditional conversion; we use ICU4J's `Transliterator`
-  * (ships with Spark's jars). Capability-equivalent, not byte-identical
-  * (dictionaries differ slightly) — so these stay out of the DuckDB oracle
-  * and are pinned by golden-file unit tests instead (SURVEY.md §5).
+  * for Simplified↔Traditional conversion; we use ICU4J's Han
+  * transliteration rules (ICU4J ships with Spark's jars). Capability-
+  * equivalent, not byte-identical (dictionaries differ slightly) — so
+  * these stay out of the DuckDB oracle and are pinned by golden-file unit
+  * tests and a differential test against ICU instead (SURVEY.md §5).
   *
-  * Thread safety: ICU `Transliterator` instances are NOT thread-safe; one
-  * instance per executor thread via `ThreadLocal` (SURVEY.md §7.5). The
-  * enclosing object is a Scala module, so UDF closures capture no state —
-  * each executor JVM lazily builds its own transliterators.
+  * Thread safety: conversion runs through two [[RuleTable]]s compiled
+  * from ICU's own rules on first use in a JVM and never written after
+  * that, so every executor thread shares them without a lock. ICU's
+  * `Transliterator` instances would not do: all of them share one cached
+  * copy of the compiled rules and lock it in every call. The enclosing
+  * object is a Scala module, so UDF closures capture no state — each
+  * executor JVM builds its own tables.
   */
 object Zh {
 
-  private val s2t: ThreadLocal[Transliterator] =
-    ThreadLocal.withInitial(() => Transliterator.getInstance("Simplified-Traditional"))
-  private val t2s: ThreadLocal[Transliterator] =
-    ThreadLocal.withInitial(() => Transliterator.getInstance("Traditional-Simplified"))
+  private lazy val s2t = RuleTable.fromIcu("Simplified-Traditional")
+  private lazy val t2s = RuleTable.fromIcu("Traditional-Simplified")
 
   /** Traditional → Simplified (reference `ZhConverterUtil.toSimple`, OMT:228).
     *
     * Short-circuit: the Han transforms only rewrite Han codepoints, so a
-    * cheap codepoint scan skips the (∼10,000× more expensive) ICU rule
-    * engine for non-Han text — on a mixed-language 100 TB corpus the
-    * common case is "nothing to convert". */
+    * cheap codepoint scan skips the rule table for non-Han text — on a
+    * mixed-language 100 TB corpus the common case is "nothing to
+    * convert". */
   def toSimplified(s: String): String =
-    if (s == null) null else if (!hasHan(s)) s else t2s.get().transliterate(s)
+    if (s == null) null else if (!hasHan(s)) s else t2s(s)
 
   /** Simplified → Traditional (reference `ZhConverterUtil.toTraditional`, OMT:233). */
   def toTraditional(s: String): String =
-    if (s == null) null else if (!hasHan(s)) s else s2t.get().transliterate(s)
+    if (s == null) null else if (!hasHan(s)) s else s2t(s)
 
   /** True iff any codepoint is of Unicode script HAN (reference
     * `isHanScript`, OMT:247-250 — same `Character.UnicodeScript` check). */
@@ -53,12 +54,12 @@ object Zh {
   def toSimplifiedU(s: UTF8String): UTF8String =
     if (s == null) null else {
       val str = s.toString
-      if (!hasHan(str)) s else UTF8String.fromString(t2s.get().transliterate(str))
+      if (!hasHan(str)) s else UTF8String.fromString(t2s(str))
     }
   def toTraditionalU(s: UTF8String): UTF8String =
     if (s == null) null else {
       val str = s.toString
-      if (!hasHan(str)) s else UTF8String.fromString(s2t.get().transliterate(str))
+      if (!hasHan(str)) s else UTF8String.fromString(s2t(str))
     }
 
   // Column-level API: native codegen'd Catalyst expressions (ZhExpressions).

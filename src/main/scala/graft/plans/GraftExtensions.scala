@@ -24,10 +24,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "contains_han(str) - true iff any codepoint has Unicode script Han",
       args => ContainsHan(args.head))
     fn("zh_to_simplified", classOf[ZhToSimplified],
-      "zh_to_simplified(str) - ICU Traditional->Simplified conversion",
+      "zh_to_simplified(str) - Traditional->Simplified by a rule table compiled from ICU's rules",
       args => ZhToSimplified(args.head))
     fn("zh_to_traditional", classOf[ZhToTraditional],
-      "zh_to_traditional(str) - ICU Simplified->Traditional conversion",
+      "zh_to_traditional(str) - Simplified->Traditional by a rule table compiled from ICU's rules",
       args => ZhToTraditional(args.head))
 
     // the one-pass signature kernels, SQL-addressable (int literals for

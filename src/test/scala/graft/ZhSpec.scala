@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Zh
@@ -219,11 +219,15 @@ class ZhSpec extends SparkSpec {
     for ((in, want) <- t2sGolden)
       assert(Zh.toSimplified(in) == want, s"T2S($in)")
     // each golden row must also hold through the native codegen'd
-    // expression path (not just the driver-side helper)
+    // expression and the UDF form (not just the driver-side helper)
     import spark.implicits._
-    val viaExpr = s2tGolden.map(_._1).toDF("s")
-      .select(Zh.zh_to_traditional(col("s"))).as[String].collect()
-    assert(viaExpr.toSeq == s2tGolden.map(_._2))
+    for ((golden, forms) <- Seq(
+           s2tGolden -> Seq[Column => Column](Zh.zh_to_traditional, Zh.zh_to_traditional_udf),
+           t2sGolden -> Seq[Column => Column](Zh.zh_to_simplified, Zh.zh_to_simplified_udf));
+         form <- forms) {
+      val got = golden.map(_._1).toDF("s").select(form(col("s"))).as[String].collect()
+      assert(got.toSeq == golden.map(_._2))
+    }
   }
 
   test("zhEnrich derives exactly the expected rows (golden, FIXTURES.md A)") {
